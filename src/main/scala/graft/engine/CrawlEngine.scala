@@ -53,8 +53,8 @@ object CrawlEngine {
   }
 
   /** Byte-free per-outcome metadata — the single-collect envelope of the
-    * tiny-wave superstep path: one scan of the landed raw table feeds the
-    * sizing stats, item decisions, spawn candidates, job-state updates,
+    * driver superstep path: one scan of the landed raw table feeds the
+    * run accounting, item decisions, spawn candidates, job-state updates,
     * fetch log and archive rows, replacing ~5 driver jobs per superstep.
     * `itemMeta` rows are (pos, key, image_id, phash).
     */
@@ -65,8 +65,8 @@ object CrawlEngine {
 
   /** Job-state transition for one fetched job — the reference worker's
     * post-job bookkeeping (pagination worker.js:223-233, finish 137-142,
-    * retry spider.js:226-248), shared verbatim by the tiny-wave driver loop
-    * and the distributed Dataset map so the two paths cannot drift.
+    * retry spider.js:226-248), shared verbatim by the driver-path loop and
+    * the distributed Dataset map so the two paths cannot drift.
     */
   private[engine] def advance(job: CrawlJob, action: String,
       hasNextPage: Boolean, newState: Map[String, String], nSpawned: Int,
@@ -187,28 +187,20 @@ case class EngineConfig(
     fetchTaskFactor: Int = 32,
     /** Target pages per fetch task (see [[fetchTaskFactor]]). */
     fetchPagesPerTask: Int = 128,
-    /** Max rows a superstep may collect to the driver (wave keys, item
-      * summaries, spawn candidates). The driver-resident plans cut ~10 Spark
-      * jobs per superstep while the politeness envelope (hosts × budget ×
-      * items/page) is driver-sized; ABOVE this threshold the same superstep
-      * runs on the retained fully-distributed plans (anti-joins + banded
-      * suppression + flag joins) — same semantics, no driver state, so a
-      * 10^6-host frontier degrades to slower supersteps instead of a driver
-      * OOM. Tests force 0 to pin driver/distributed parity.
+    /** Bound on the driver path of a superstep (see [[CrawlEngine.step]]).
+      * A wave of at most `driverCollectMaxRows / 1024` rows (1,953 at the
+      * default) runs on the driver: ONE collect of its byte-free outcome
+      * metadata feeds the item decisions, spawn dedup and state rewrite,
+      * ~5 Spark jobs per superstep. The /1024 is the per-page envelope: a
+      * page yields at most ~1,024 items + links, so the rows such a step
+      * holds on the driver (wave keys, item summaries, spawn candidates)
+      * stay under this bound. Larger waves run the distributed plans
+      * (anti-joins + banded suppression + flag joins) — same semantics, no
+      * driver state, so a 10^6-host frontier degrades to slower supersteps
+      * instead of a driver OOM. Also caps the driver-side item-meta mirror.
+      * Tests force 0 to pin driver/distributed parity.
       */
-    driverCollectMaxRows: Long = 2000000L,
-    /** Upper bound (rows) for the TINY-wave single-collect superstep path —
-      * the driver loop that replaces ~5 Spark jobs per step (see step()).
-      * Deliberately much tighter than driverCollectMaxRows: the tiny path
-      * also hauls each outcome's spawned-job list through one driver
-      * thread, so a 400-listing wave fanning out 100k spawns would turn a
-      * parallel canonicalize into serial driver work — measured as a
-      * ~1.5% N→4N efficiency tax at bench scale. Toy crawls (waves of
-      * dozens) get the ~3× superstep speedup; anything larger keeps the
-      * round-2 parallel plans. Also caps the frontier size for the wave
-      * collect + narrow-shuffle step conf.
-      */
-    tinyWaveMaxRows: Long = 256L)
+    driverCollectMaxRows: Long = 2000000L)
 
 /** Per-run roll-up returned by [[CrawlEngine.run]]. */
 case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long)
@@ -313,7 +305,7 @@ final class CrawlEngine(
     * switches suppression to live-set semantics). */
   private var itemMetaCache: Option[(Int, DataFrame)] = None
   /** Driver-side mirror of [[itemMetaCache]]'s (key, phash) rows while the
-    * landed-item count stays ≤ driverCollectMaxRows — the tiny-wave
+    * landed-item count stays ≤ driverCollectMaxRows — the driver-path
     * suppression probe then runs with ZERO Spark jobs (the per-step
     * distributed existing-meta scan was the largest remaining flat cost of
     * a toy-scale superstep). None above the cap or after a distributed-path
@@ -321,19 +313,24 @@ final class CrawlEngine(
     */
   private var itemMetaLocal: Option[Array[(String, Long)]] = None
 
-  /** Row bound of the tiny-wave path (see [[EngineConfig.tinyWaveMaxRows]]);
-    * 0 when driverCollectMaxRows forces everything distributed. */
-  private def tinyCap: Long =
-    math.min(cfg.tinyWaveMaxRows, cfg.driverCollectMaxRows / 1024)
+  /** Row bound of a driver-path wave (see
+    * [[EngineConfig.driverCollectMaxRows]]); 0 when driverCollectMaxRows
+    * forces everything distributed. */
+  private def tinyCap: Long = cfg.driverCollectMaxRows / 1024
+
+  /** The pending frontier is small enough that its wave is driver-sized by
+    * construction (see [[step]]). */
+  private def tinyFrontier: Boolean =
+    pendingCount > 0 && pendingCount <= math.max(1L, tinyCap)
 
   // ---- exact driver-side run accounting --------------------------------
   // Maintained while every superstep since seed() ran in THIS engine
-  // instance on the driver-resident paths: unfinished-frontier count (lets
+  // instance on the driver path: unfinished-frontier count (lets
   // run() stop without one final empty-wave probe — wave build + count +
   // pending-min agg, ~1 s of pure flat cost) and the [[RunSummary]] tallies
   // (fetched = Σ wave sizes; items = Σ created flags, exact because a key
-  // is "created" exactly once; dead letters from the sizing probe). Any
-  // step that can't account exactly (distributed fallback, resume into a
+  // is "created" exactly once; dead letters off the outcome metadata). Any
+  // step that can't account exactly (distributed path, resume into a
   // fresh engine) flips the state to unknown and the log-based paths take
   // over — identical values, a few extra jobs.
   private var pendingCount: Long = -1L // unfinished frontier rows; -1 unknown
@@ -686,7 +683,7 @@ final class CrawlEngine(
 
     acctValid = true
     fetchedAcc = 0L; itemsAcc = 0L; dlAcc = 0L
-    if (seeds.size <= math.max(1L, cfg.driverCollectMaxRows / 1024)) {
+    if (seeds.size <= math.max(1L, tinyCap)) {
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
       // both state tables land coalesced. The seed ALSO primes the frontier
@@ -733,13 +730,27 @@ final class CrawlEngine(
   /** Execute the next superstep. Returns false (and commits nothing) when no
     * eligible work remains — the analogue of the worker's empty-poll exit
     * (reference: src/worker.js:108-110).
+    *
+    * Once the wave is built, the superstep takes one of two paths:
+    *  - driver path: the wave has at most [[tinyCap]] =
+    *    `driverCollectMaxRows / 1024` rows and the bloom sketch fits
+    *    `bloomBroadcastMaxBytes`. ONE job collects the landed outcomes'
+    *    byte-free metadata; item decisions, spawn dedup, job-state updates,
+    *    fetch log and archive rows are driver loops over that array feeding
+    *    local relations. A page yields at most ~1,024 items + links, so
+    *    everything the driver holds stays under driverCollectMaxRows rows.
+    *  - distributed path: every other wave — banded suppression join,
+    *    windowed winners, bloom cogroup, flag join and frontier anti-join;
+    *    same semantics, no driver state.
+    * Both run the same transition ([[CrawlEngine.advance]] /
+    * [[CrawlEngine.logRow]]), so a crawl may switch paths between steps.
     */
   def step(): Boolean = withStepConf(
     // tiny pending frontier ⇒ narrow the step's exchanges to ~pendingCount
     // tasks: full-width 32-task windows over a 20-row frontier cost pure
     // scheduler latency. Unknown or large pendingCount leaves the session
     // width untouched (bench/production scale, distributed-forced tests).
-    if (pendingCount > 0 && pendingCount <= math.max(1L, tinyCap))
+    if (tinyFrontier)
       Some(math.min(spark.sessionState.conf.numShufflePartitions.toLong,
         pendingCount).toInt)
     else None) {
@@ -769,18 +780,12 @@ final class CrawlEngine(
       case Some((`v`, f)) => f
       case _ => readFrontier(v)
     }
-    // localCheckpoint (eager) on shared intermediates: truncates lineage so
-    // every downstream action analyzes a shallow scan instead of re-planning
-    // the whole superstep tree — catalyst planning time was ~half of each
-    // superstep's wall clock before this (measured via SparkListener).
     // A tiny pending frontier ⇒ the wave is driver-sized by construction:
-    // ONE collect job replaces the checkpoint + count pair, and the fetch
-    // stage repartitions a local relation. Unknown/large frontiers keep the
-    // eager checkpoint (truncates lineage so every downstream action
-    // analyzes a shallow scan — catalyst planning was ~half of superstep
-    // wall clock before it) + cheap count.
-    val tinyFrontier =
-      pendingCount > 0 && pendingCount <= math.max(1L, tinyCap)
+    // ONE collect job builds it, and the fetch stage repartitions a local
+    // relation. Unknown/large frontiers take an eager localCheckpoint
+    // (truncates lineage so every downstream action analyzes a shallow
+    // scan — catalyst planning was ~half of superstep wall clock before
+    // it) + a cheap count.
     def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = {
       val plan = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
         cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter)
@@ -792,11 +797,6 @@ final class CrawlEngine(
         (w, w.count())
       }
     }
-    // The count sizes the superstep: waves under driverCollectMaxRows run
-    // the driver-resident plans (wave keys, item summaries, spawn candidates
-    // live driver-side — the exact politeness envelope the broadcast
-    // anti-joins shipped to every executor anyway, ~10 fewer Spark jobs per
-    // superstep); larger waves fall back to the retained distributed plans.
     var (wave, waveN) = timed("wave")(buildWave(s))
     if (waveN == 0) {
       // Nothing eligible *now*, but retry-backoff / crawl-delay jobs may be
@@ -817,7 +817,10 @@ final class CrawlEngine(
       if (waveN == 0) { wave.unpersist(); return false }
     }
     val stepNow = s
-    val waveOnDriver = waveN <= cfg.driverCollectMaxRows
+    // the superstep's one path decision (see the scaladoc above)
+    val sketchBytes = cfg.bloomPartitions *
+      BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, cfg.bloomFpp)
+    val onDriver = waveN <= tinyCap && sketchBytes <= cfg.bloomBroadcastMaxBytes
 
     // -- fetch+extract -----------------------------------------------------
     // Rebalance the SELECTED wave before fetching (see EngineConfig
@@ -827,9 +830,9 @@ final class CrawlEngine(
       val base = spark.sessionState.conf.numShufflePartitions
       val byWave = ((waveN + cfg.fetchPagesPerTask - 1) / cfg.fetchPagesPerTask).toInt
       // floor at min(base, waveN): a 19-row wave gets ≤19 tasks, not the
-      // full shuffle-partition count of near-empty launches (the round-2
-      // fixed floor doubled toy-scale superstep cost); big waves keep the
-      // adaptive ~pagesPerTask sizing capped at base × factor
+      // full shuffle-partition count of near-empty launches (a fixed floor
+      // doubled toy-scale superstep cost); big waves keep the adaptive
+      // ~pagesPerTask sizing capped at base × factor
       val floor = math.max(1L, math.min(base.toLong, waveN)).toInt
       math.max(floor, math.min(base * cfg.fetchTaskFactor, byWave))
     }
@@ -851,19 +854,13 @@ final class CrawlEngine(
         .parquet(rawPath))
     val outcomes = spark.read.schema(outcomeSchema).parquet(rawPath)
 
-    // -- tiny-wave fast path: waves under tinyCap (≤ tinyWaveMaxRows AND
-    // 1024× under the driver threshold — breaching the envelope from there
-    // would need >1024 items or links per page ON AVERAGE, far outside any
-    // sane scrape) collect the step's ENTIRE byte-free outcome metadata in
-    // ONE job. The
-    // sizing stats, item tuples, spawn candidates, wave keys, job-state
-    // updates, fetch-log and archive rows are all derived from this single
-    // array — at toy wave sizes the superstep's cost is otherwise ~5 extra
-    // scheduler round-trips of flat latency per step (q50 measured ~2×).
-    // Big waves (bench/production scale) keep the round-2 plans unchanged.
-    val tinyWave = waveN <= tinyCap
+    // -- tiny-wave fast path, i.e. the driver path: ONE job collects the
+    // step's ENTIRE byte-free outcome metadata. The run accounting, item
+    // tuples, spawn candidates, wave keys, job-state updates, fetch-log and
+    // archive rows are all derived from this single array. None on the
+    // distributed path.
     val metaLocal: Option[Array[CrawlEngine.OutcomeMeta]] =
-      if (!tinyWave) None
+      if (!onDriver) None
       else Some(timed("meta.collect")(outcomes
         .select(col("job"), col("status"), col("action"), col("hasNextPage"),
           col("newState"), col("spawned"),
@@ -871,105 +868,69 @@ final class CrawlEngine(
             "'_1', i, '_2', it.key, '_3', coalesce(it.image_id, ''), " +
             "'_4', it.phash))").as("itemMeta"))
         .as[CrawlEngine.OutcomeMeta].collect()))
-
-    // -- sizing probe: decides driver-resident vs distributed plans for the
-    // item and spawn paths, and (while exact accounting is live) tallies
-    // this step's dead letters + continuing jobs — free off the tiny-path
-    // meta array, one narrow agg otherwise.
-    val (nIncomingItems, nSpawnedUpper, dlStep, contStep) = timed("probe")(
-      metaLocal match {
-        case Some(rows) =>
-          (rows.iterator.map(_.itemMeta.size.toLong).sum,
-            rows.iterator.map(_.spawned.size.toLong).sum,
-            rows.count(r => r.status >= 400 && r.action == "stop").toLong,
-            rows.count(r => r.action == "retry" ||
-              (r.action == "ok" && r.hasNextPage)).toLong)
-        case None =>
-          val r = outcomes.agg(
-            coalesce(sum(size(col("items"))), lit(0L)),
-            coalesce(sum(size(col("spawned"))), lit(0L)),
-            coalesce(sum(when(col("status") >= 400 && col("action") === "stop",
-              1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(when(col("action") === "retry" ||
-              (col("action") === "ok" && col("hasNextPage")), 1L).otherwise(0L)),
-              lit(0L))).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      })
-    val itemsOnDriver = nIncomingItems <= cfg.driverCollectMaxRows
+    // this step's dead letters + continuing jobs for the run accounting;
+    // -1 (unknown) on the distributed path
+    val (dlStep, contStep) = timed("probe")(metaLocal match {
+      case Some(rows) =>
+        (rows.count(r => r.status >= 400 && r.action == "stop").toLong,
+          rows.count(r => r.action == "retry" ||
+            (r.action == "ok" && r.hasNextPage)).toLong)
+      case None => (-1L, -1L)
+    })
 
     // -- items path (raw outcomes + equality deletes; merge-on-read) -----
     // The bytes are already landed; this phase only DECIDES — winner pick,
     // created-vs-updated flags, phash near-dup suppression — and persists
     // the decisions as small byte-free side outputs (the winner pick is
     // re-derived deterministically at read time; suppression lands as the
-    // step's equality-delete keys). Incoming items per superstep are
-    // normally politeness-bounded, so their (srcJob, key, image_id, phash)
-    // summaries live driver-side; above driverCollectMaxRows the same
-    // decisions run distributed: banded suppression join + per-key winner
-    // window + flag aggregation — same semantics, nothing driver-resident.
-    // Every scan below reads only byte-free top-level columns of the raw
-    // outcome table (the payload column is never touched).
+    // step's equality-delete keys). The driver path decides over the meta
+    // array's (srcJob, key, image_id, phash) summaries; the distributed
+    // path runs the same decisions as a banded suppression join + per-key
+    // winner window + flag aggregation. Every scan below reads only
+    // byte-free top-level columns of the raw outcome table (the payload
+    // column is never touched).
     // (key, phash) of every existing item row — cache hit in steady state
-    // (maintained below each step); miss = resume / first step, one
-    // checkpointed read of the delta dirs (awaits any in-flight commit)
-    val existingMetaOpt: Option[DataFrame] = itemMetaCache match {
-      case Some((`committed`, df)) => Some(df)
+    // (maintained below each step); none before the first commit (the
+    // fetch job has just created the raw dir, but no step is committed);
+    // miss = resume, one checkpointed read of the delta dirs (awaits any
+    // in-flight commit)
+    val existingMeta: DataFrame = itemMetaCache match {
+      case Some((`committed`, df)) => df
+      case _ if committed < 0 =>
+        itemMetaLocal = Some(Array.empty)
+        Seq.empty[(String, Long)].toDF("key", "phash")
       case _ =>
         itemMetaLocal = None // stale vs the freshly-rebuilt cache
-        awaitCommit()
-        if (graft.state.StateIO.isDir(rawDir) || latestBaseStep >= 0) {
-          val df = readItemDeltas(committed, withBytes = false)
-            .select(col("key"), col("phash"))
-            .toDF().localCheckpoint(true)
-          // resume-time one-off: repopulate the driver mirror while small,
-          // so subsequent tiny steps probe with zero Spark jobs
-          if (tinyWave && df.count() <= cfg.driverCollectMaxRows)
-            itemMetaLocal = Some(df.as[(String, Long)].collect())
-          Some(df)
-        } else None
+        val df = readItemDeltas(committed, withBytes = false)
+          .select(col("key"), col("phash"))
+          .toDF().localCheckpoint(true)
+        // resume-time one-off: repopulate the driver mirror while small,
+        // so subsequent driver-path steps probe with zero Spark jobs
+        if (onDriver && df.count() <= cfg.driverCollectMaxRows)
+          itemMetaLocal = Some(df.as[(String, Long)].collect())
+        df
     }
-    // carries the in-page position so the winner pick below uses the ONE
-    // canonical ordering (srcJob, image_id, pos) — identical to the
-    // read-side re-derivation in readItemDeltas; a divergent tiebreak
-    // (e.g. phash) would let the landed item's phash differ from the one
-    // recorded in the item-meta cache, corrupting later near-dup votes
-    // and breaking resume-identical parity
-    val itemMetaDf = outcomes
-      .select(col("job.urlKey").as("srcJob"), posexplode(expr(
-        "transform(items, it -> named_struct(" +
-          "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
-        .as(Seq("pos", "it")))
-      .select(col("srcJob"), col("pos"), col("it.key").as("key"),
-        coalesce(col("it.image_id"), lit("")).as("image_id"),
-        col("it.phash").as("phash"))
 
-    // (per-src flags: Left = driver map, Right = DataFrame (srcJob,
-    // created, updated); distributed-path winners checkpoint; this step's
-    // landed (key, phash) rows for the item-meta cache; this step's
-    // suppressed keys — the equality-delete rows the commit persists so
-    // readers drop them from the already-landed raw outcomes)
-    val (flags: Either[Map[Long, (Long, Long)], DataFrame],
+    // (flags: Left = each outcome with its (created, updated) counts,
+    // Right = DataFrame (srcJob, created, updated); distributed-path
+    // winners checkpoint; this step's landed (key, phash) rows for the
+    // item-meta cache; this step's suppressed keys — the equality-delete
+    // rows the commit persists so readers drop them from the already-landed
+    // raw outcomes)
+    val (flagged: Either[Array[(CrawlEngine.OutcomeMeta, (Long, Long))], DataFrame],
          winnersCkpt: Option[DataFrame],
          newMetaOpt: Option[DataFrame],
          newMetaLocal: Option[Array[(String, Long)]],
-         suppressedOut: Option[DataFrame]) = timed("items")(
-      if (itemsOnDriver) {
-        // (srcJob, pos, key, image_id, phash) — free off the tiny-path meta
-        // array, one collect of the byte-free item projection otherwise
-        val itemTups: Array[(Long, Int, String, String, Long)] = metaLocal match {
-          case Some(rows) => rows.iterator.flatMap(r => r.itemMeta.iterator
+         suppressedOut: Option[DataFrame]) = timed("items")(metaLocal match {
+      case Some(rows) =>
+        // (srcJob, pos, key, image_id, phash)
+        val itemTups: Array[(Long, Int, String, String, Long)] =
+          rows.iterator.flatMap(r => r.itemMeta.iterator
             .map(m => (r.job.urlKey, m._1, m._2, m._3, m._4))).toArray
-          case None => itemMetaDf.as[(Long, Int, String, String, Long)].collect()
-        }
         // existing side: the driver mirror when valid (zero Spark jobs),
         // else the distributed (key, phash) scan
-        val existingSide: Option[Either[Array[(String, Long)], DataFrame]] =
-          if (itemTups.isEmpty) None
-          else (itemMetaLocal, existingMetaOpt) match {
-            case (Some(arr), Some(_)) => Some(Left(arr))
-            case (_, Some(df)) => Some(Right(df))
-            case _ => None
-          }
+        val existingSide =
+          if (itemTups.isEmpty) None else Some(itemMetaLocal.toLeft(existingMeta))
         val (suppressedKeys, existedKeys) = Items.suppressAndSeenSets(
           itemTups.map(t => (t._1, t._3, t._4, t._5)), existingSide,
           cfg.phashThreshold)
@@ -992,14 +953,27 @@ final class CrawlEngine(
         val sup =
           if (suppressedKeys.isEmpty) None
           else Some(suppressedKeys.toSeq.toDF("key"))
-        (Left(flagBySrc), None, nm, if (nmPairs.isEmpty) None else Some(nmPairs), sup)
-      } else {
-        // distributed twin — same outputs, no driver state. The suppressed
-        // plan reads only stable inputs (the landed raw table + the meta
-        // cache), so the background commit re-executes it safely.
-        val existingDf = existingMetaOpt
+        (Left(rows.map(r => (r, flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))))),
+          None, nm, if (nmPairs.isEmpty) None else Some(nmPairs), sup)
+      case None =>
+        // carries the in-page position so the winner pick below uses the
+        // ONE canonical ordering (srcJob, image_id, pos) — identical to the
+        // read-side re-derivation in readItemDeltas; a divergent tiebreak
+        // (e.g. phash) would let the landed item's phash differ from the one
+        // recorded in the item-meta cache, corrupting later near-dup votes
+        // and breaking resume-identical parity
+        val itemMetaDf = outcomes
+          .select(col("job.urlKey").as("srcJob"), posexplode(expr(
+            "transform(items, it -> named_struct(" +
+              "'key', it.key, 'image_id', it.image_id, 'phash', it.phash))"))
+            .as(Seq("pos", "it")))
+          .select(col("srcJob"), col("pos"), col("it.key").as("key"),
+            coalesce(col("it.image_id"), lit("")).as("image_id"),
+            col("it.phash").as("phash"))
+        // The suppressed plan reads only stable inputs (the landed raw table
+        // + the meta cache), so the background commit re-executes it safely.
         val suppressed = Items.suppressedKeyDf(
-          itemMetaDf, existingDf, cfg.phashThreshold,
+          itemMetaDf, Some(existingMeta), cfg.phashThreshold,
           broadcastIncoming = false)
         val keptMeta = itemMetaDf.join(suppressed, Seq("key"), "left_anti")
         val win = org.apache.spark.sql.expressions.Window
@@ -1011,171 +985,70 @@ final class CrawlEngine(
           .withColumn("rn", row_number().over(win))
           .filter(col("rn") === 1).drop("rn")
           .localCheckpoint(true)
-        val winnersFlagged = existingDf match {
-          case Some(ex) => winnersDf.join(
-            ex.select(col("key")).distinct().withColumn("existed", lit(true)),
-            Seq("key"), "left")
-          case None => winnersDf.withColumn("existed", lit(false))
-        }
-        val flagDf = winnersFlagged.groupBy(col("srcJob"))
-          .agg(
-            sum(when(coalesce(col("existed"), lit(false)), 0L).otherwise(1L))
-              .as("created"),
-            sum(when(coalesce(col("existed"), lit(false)), 1L).otherwise(0L))
-              .as("updated"))
+        val existed = coalesce(col("existed"), lit(false))
+        val flagDf = winnersDf
+          .join(existingMeta.select(col("key")).distinct()
+            .withColumn("existed", lit(true)), Seq("key"), "left")
+          .groupBy(col("srcJob"))
+          .agg(sum(when(existed, 0L).otherwise(1L)).as("created"),
+            sum(when(existed, 1L).otherwise(0L)).as("updated"))
         (Right(flagDf), Some(winnersDf),
           Some(winnersDf.select(col("key"), col("phash"))), None,
           if (cfg.phashThreshold < 0) None else Some(suppressed))
-      })
+    })
 
     // -- item-meta cache update (backs the next superstep's suppression) --
-    val (staleMeta: Option[DataFrame], mergedMeta: Option[DataFrame]) =
-      (existingMetaOpt, newMetaOpt) match {
-        case (Some(e), Some(n)) =>
-          (Some(e), Some(e.unionByName(n).localCheckpoint(true)))
-        case (Some(e), None) => (None, Some(e))
-        case (None, Some(n)) => (None, Some(n.localCheckpoint(true)))
-        case _ => (None, None)
-      }
-    itemMetaCache = mergedMeta.map((stepNow, _))
+    val (staleMeta: Option[DataFrame], mergedMeta: DataFrame) = newMetaOpt match {
+      case Some(n) =>
+        (Some(existingMeta), existingMeta.unionByName(n).localCheckpoint(true))
+      case None => (None, existingMeta)
+    }
+    itemMetaCache = Some((stepNow, mergedMeta))
     // driver mirror follows the cache exactly; any case it cannot mirror
     // (distributed-path step, cap breach) drops it — the distributed probe
     // then serves subsequent steps with identical semantics
-    itemMetaLocal = (existingMetaOpt, newMetaOpt) match {
-      case (Some(_), Some(_)) => (itemMetaLocal, newMetaLocal) match {
-        case (Some(o), Some(n))
-          if o.length.toLong + n.length <= cfg.driverCollectMaxRows =>
-          Some(o ++ n)
-        case _ => None
-      }
-      case (Some(_), None) => itemMetaLocal
-      case (None, Some(_)) =>
-        newMetaLocal.filter(_.length <= cfg.driverCollectMaxRows)
+    if (newMetaOpt.nonEmpty) itemMetaLocal = (itemMetaLocal, newMetaLocal) match {
+      case (Some(o), Some(n))
+        if o.length.toLong + n.length <= cfg.driverCollectMaxRows => Some(o ++ n)
       case _ => None
     }
 
-    // -- spawned-jobs path (byte-free scans of the landed outcomes; on the
-    // tiny path a LOCAL relation off the meta array — the canon/robots/
-    // dedup pipeline below is identical, it just never rescans the table)
-    val spawnedRaw = metaLocal match {
-      case Some(rows) =>
-        val sp = rows.iterator.flatMap(_.spawned.iterator
-          .map(s => (s.routeId, s.url, s.query)))
-        val rd = rows.iterator.filter(_.action.startsWith("redirect:"))
-          .map(r => (r.job.routeId, r.action.substring("redirect:".length),
-            Map.empty[String, String]))
-        spark.createDataset((sp ++ rd).toSeq)
-          .toDF("routeId", "rawUrl", "query")
-      case None =>
-        val spawnedPart = outcomes
-          .select(explode(col("spawned")).as("sj"))
-          .select(col("sj.routeId").as("routeId"), col("sj.url").as("rawUrl"),
-            col("sj.query").as("query"))
-        val redirectPart = outcomes
-          .filter(col("action").startsWith("redirect:"))
-          .select(col("job.routeId").as("routeId"),
-            expr(s"substring(action, ${"redirect:".length + 1})").as("rawUrl"),
-            typedLit(Map.empty[String, String]).as("query"))
-        spawnedPart.unionByName(redirectPart)
-    }
-    val known = spawnedRaw.filter(col("routeId").isin(routes.keys.toSeq: _*))
-    // query-templated spawns (url empty, query set): build the URL through
-    // the route's template — reference `route.getUrl(job)` over the spawned
-    // op's query (worker.js:281-292, route.js:31-37). A throwing template
-    // drops the job (the reference fails it; a queryable drop is kinder).
-    val routesForResolve = routesBc
-    val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
-      if (u != null && u.nonEmpty) u
-      else try routesForResolve.value(rid).urlTemplate(
-        Option(q).getOrElse(Map.empty))
-      catch { case _: Exception => "" })
-    val resolved = known
-      .withColumn("rawUrl", resolveUrl(col("routeId"), col("rawUrl"), col("query")))
-      .filter(col("rawUrl") =!= "")
-    val canonical = resolved
-      .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
-      .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
-      .withColumn("urlKey", xxhash64(col("url")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("urlKey")).orderBy(col("routeId"))))
-      .filter(col("rn") === 1).drop("rn", "rawUrl")
-    // checkpointed lazily: the driver-resident branch consumes this plan
-    // with ONE collect, so materializing it first would only add a job
-    val allowedJobsPlan = Robots.allowed(canonical, robotsRules)
+    // -- spawned-jobs path: the driver path runs resolve → canonicalize →
+    // xxhash64 → dedup → robots as a driver loop over the meta array, then
+    // probes the driver-side bloom shards; the distributed path runs the
+    // same pipeline as a plan over the landed outcomes and probes by
+    // cogroup. UrlCanon/urlKeyScala/allowedLocal are the exact functions the
+    // plan's expressions evaluate — pinned by the path-switching parity test.
     var allowedJobsCkpt: Option[DataFrame] = None
-
-    val sketchBytes = cfg.bloomPartitions *
-      BloomSeen.estimatedShardBytes(cfg.bloomCapacityPerShard, cfg.bloomFpp)
-    // While total sketch size fits the broadcast budget (i.e. until the
-    // frontier reaches billions of keys) AND the wave's spawn candidates fit
-    // the driver envelope, the shards live driver-side: driver probe over
-    // collected candidate keys + driver-merged insert. Beyond either bound
-    // the cogroup paths take over — same semantics, fully distributed.
-    val shardsLocal: Option[Array[BloomShard]] =
-      if (sketchBytes <= cfg.bloomBroadcastMaxBytes &&
-          nSpawnedUpper <= cfg.driverCollectMaxRows)
-        Some(shardCache.collect { case (`v`, sh) => sh }
-          .getOrElse(readBloom(v).collect()))
-      else None
-    val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
-    def toJobs(df: DataFrame): Dataset[CrawlJob] = df
-      .withColumn("priority", coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
-      .select(col("urlKey").as("_1"), col("url").as("_2"), col("host").as("_3"),
-        col("routeId").as("_4"), col("priority").cast("int").as("_5"),
-        col("query").as("_6"))
-      .as[(Long, String, String, String, Int, Map[String, String])]
-      .map { case (k, u, h, r, p, q) =>
-        CrawlJob(k, u, h, r, priority = p, query = q,
-          createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
-      }
-    // (fresh rows, their keys when driver-resident)
-    val (fresh: Dataset[CrawlJob], freshKeysLocal: Option[Array[Long]]) =
-      timed("spawn")(shardsLocal match {
-        case Some(shards) =>
-          // ONE collect serves probe + fresh-job construction: candidates
-          // after dedup are spawn-bounded (guarded by driverCollectMaxRows)
-          // and byte-free — the same envelope the previous plan shipped via
-          // broadcast(probed), minus a checkpoint job, a key collect, and a
-          // re-scan per superstep. On the tiny path even that collect goes
-          // away: the SAME resolve → canonicalize → xxhash64 → dedup →
-          // robots pipeline runs as a driver loop over the meta array
-          // (UrlCanon/urlKeyScala/allowedLocal are the exact functions the
-          // plan's expressions evaluate — pinned by the middle-vs-tiny
-          // parity test), zero Spark jobs.
-          val cand: Array[(Long, String, String, String, Map[String, String])] =
-            metaLocal match {
-              case Some(rows) =>
-                val raw = rows.iterator.flatMap(_.spawned.iterator
-                    .map(s => (s.routeId, s.url, s.query))) ++
-                  rows.iterator.filter(_.action.startsWith("redirect:"))
-                    .map(r => (r.job.routeId,
-                      r.action.substring("redirect:".length),
-                      Map.empty[String, String]))
-                val resolved = raw.filter(t => routes.contains(t._1))
-                  .flatMap { case (rid, u, q) =>
-                    val qq = Option(q).getOrElse(Map.empty[String, String])
-                    val ru =
-                      if (u != null && u.nonEmpty) u
-                      else try routes(rid).urlTemplate(qq)
-                      catch { case _: Exception => "" }
-                    if (ru.isEmpty) None
-                    else {
-                      val cu = UrlCanon.canonicalize(ru)
-                      Some((graft.canon.CanonUdfs.urlKeyScala(cu), cu,
-                        UrlCanon.host(cu), rid, qq))
-                    }
-                  }
-                resolved.toArray.groupBy(_._1)
-                  .map { case (_, g) => g.minBy(_._4) } // dedup: min routeId per key
-                  .filter(c => Robots.allowedLocal(c._2, c._3, robotsRules))
-                  .toArray
-              case None => allowedJobsPlan
-                .select(col("urlKey"), col("url"), col("host"), col("routeId"),
-                  col("query"))
-                .as[(Long, String, String, String, Map[String, String])]
-                .collect()
+    // (fresh rows; on the driver path also the probed shards + fresh keys)
+    val (fresh: Dataset[CrawlJob], freshLocal: Option[(Array[BloomShard], Array[Long])]) =
+      timed("spawn")(metaLocal match {
+        case Some(rows) =>
+          val shards = shardCache.collect { case (`v`, sh) => sh }
+            .getOrElse(readBloom(v).collect())
+          val raw = rows.iterator.flatMap(_.spawned.iterator
+              .map(s => (s.routeId, s.url, s.query))) ++
+            rows.iterator.filter(_.action.startsWith("redirect:"))
+              .map(r => (r.job.routeId, r.action.substring("redirect:".length),
+                Map.empty[String, String]))
+          val resolved = raw.filter(t => routes.contains(t._1))
+            .flatMap { case (rid, u, q) =>
+              val qq = Option(q).getOrElse(Map.empty[String, String])
+              val ru =
+                if (u != null && u.nonEmpty) u
+                else try routes(rid).urlTemplate(qq)
+                catch { case _: Exception => "" }
+              if (ru.isEmpty) None
+              else {
+                val cu = UrlCanon.canonicalize(ru)
+                Some((graft.canon.CanonUdfs.urlKeyScala(cu), cu,
+                  UrlCanon.host(cu), rid, qq))
+              }
             }
+          val cand = resolved.toArray.groupBy(_._1)
+            .map { case (_, g) => g.minBy(_._4) } // dedup: min routeId per key
+            .filter(c => Robots.allowedLocal(c._2, c._3, robotsRules))
+            .toArray
           val candKeys = cand.map(_._1)
           val might = BloomSeen.probeLocal(shards, candKeys, cfg.bloomPartitions)
           val posSet = candKeys.iterator.zip(might.iterator)
@@ -1213,9 +1086,41 @@ final class CrawlEngine(
                 priority = routes.get(r).map(_.priority).getOrElse(50),
                 query = q, createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
             }.toSeq
-          (spark.createDataset(freshJobs), Some(freshKeySet.toArray))
+          (spark.createDataset(freshJobs), Some((shards, freshKeySet.toArray)))
         case None =>
-          val allowedJobs = allowedJobsPlan.localCheckpoint(true)
+          val spawnedPart = outcomes
+            .select(explode(col("spawned")).as("sj"))
+            .select(col("sj.routeId").as("routeId"), col("sj.url").as("rawUrl"),
+              col("sj.query").as("query"))
+          val redirectPart = outcomes
+            .filter(col("action").startsWith("redirect:"))
+            .select(col("job.routeId").as("routeId"),
+              expr(s"substring(action, ${"redirect:".length + 1})").as("rawUrl"),
+              typedLit(Map.empty[String, String]).as("query"))
+          val known = spawnedPart.unionByName(redirectPart)
+            .filter(col("routeId").isin(routes.keys.toSeq: _*))
+          // query-templated spawns (url empty, query set): build the URL
+          // through the route's template — reference `route.getUrl(job)`
+          // over the spawned op's query (worker.js:281-292, route.js:31-37).
+          // A throwing template drops the job (the reference fails it; a
+          // queryable drop is kinder).
+          val routesForResolve = routesBc
+          val resolveUrl = udf((rid: String, u: String, q: Map[String, String]) =>
+            if (u != null && u.nonEmpty) u
+            else try routesForResolve.value(rid).urlTemplate(
+              Option(q).getOrElse(Map.empty))
+            catch { case _: Exception => "" })
+          val canonical = known
+            .withColumn("rawUrl", resolveUrl(col("routeId"), col("rawUrl"), col("query")))
+            .filter(col("rawUrl") =!= "")
+            .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
+            .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
+            .withColumn("urlKey", xxhash64(col("url")))
+            .withColumn("rn", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy(col("urlKey")).orderBy(col("routeId"))))
+            .filter(col("rn") === 1).drop("rn", "rawUrl")
+          val allowedJobs = Robots.allowed(canonical, robotsRules).localCheckpoint(true)
           allowedJobsCkpt = Some(allowedJobs)
           val bloom = readBloom(v)
           val probed = BloomSeen.probe(bloom,
@@ -1246,21 +1151,33 @@ final class CrawlEngine(
             .join(broadcast(maybeSeen.select(col("urlKey"))), Seq("urlKey"), "left_semi")
           val confirmedNew = maybeSeen.join(
             broadcast(seenConfirmed), Seq("urlKey"), "left_anti")
-          val f = toJobs(definitelyNew.unionByName(confirmedNew)).localCheckpoint(true)
+          val prioByRoute = typedLit(routes.map { case (k, r) => k -> r.priority })
+          val f = definitelyNew.unionByName(confirmedNew)
+            .withColumn("priority",
+              coalesce(element_at(prioByRoute, col("routeId")), lit(50)))
+            .select(col("urlKey").as("_1"), col("url").as("_2"), col("host").as("_3"),
+              col("routeId").as("_4"), col("priority").cast("int").as("_5"),
+              col("query").as("_6"))
+            .as[(Long, String, String, String, Int, Map[String, String])]
+            .map { case (k, u, h, r, p, q) =>
+              CrawlJob(k, u, h, r, priority = p, query = q,
+                createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
+            }
+            .localCheckpoint(true)
           probed.unpersist()
           (f, None)
       })
 
     // -- run accounting update (see fields above) ------------------------
-    val freshN = freshKeysLocal.map(_.length.toLong).getOrElse(-1L)
+    val freshN = freshLocal.map(_._2.length.toLong).getOrElse(-1L)
     fetchedAcc += waveN
     pendingCount =
       if (pendingCount >= 0L && contStep >= 0L && freshN >= 0L)
         pendingCount - waveN + contStep + freshN
       else -1L
     if (dlStep >= 0L) dlAcc += dlStep else acctValid = false
-    flags match {
-      case Left(m) => itemsAcc += m.valuesIterator.map(_._1).sum
+    flagged match {
+      case Left(rows) => itemsAcc += rows.iterator.map(_._2._1).sum
       case Right(_) => acctValid = false
     }
 
@@ -1269,79 +1186,60 @@ final class CrawlEngine(
     val routesLocal = routesBc
     val backoffLocal = cfg.retryBackoffSteps
     // Both paths run the SAME transition function (CrawlEngine.advance /
-    // logRow). Tiny path: one driver loop over the meta array (flags are
-    // the driver map by construction) → local relations, no re-scan of the
-    // landed table for the state rewrite, the fetch-log write OR the
-    // archive write. Distributed path: a byte-free Dataset projection with
-    // flags attached by broadcast map or left join.
-    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame) =
-      (metaLocal, flags) match {
-        case (Some(rows), Left(flagBySrc)) =>
-          val upd = rows.map { r =>
-            val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
-            val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
-            CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
-              r.spawned.size, c, u, stepNow, tdel, backoffLocal)
-          }
-          val logs = rows.map { r =>
-            val (c, u) = flagBySrc.getOrElse(r.job.urlKey, (0L, 0L))
-            CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
-              r.hasNextPage, r.spawned.size, c, u)
-          }
-          (spark.createDataset(upd.toSeq).coalesce(1),
-            spark.createDataset(logs.toSeq).coalesce(1).toDF())
-        case _ =>
-          val metaDs = outcomes.select(col("job").as("_1"), col("status").as("_2"),
-              col("action").as("_3"), col("hasNextPage").as("_4"),
-              col("newState").as("_5"), size(col("spawned")).as("_6"))
-            .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int)]
-          val metaFlagged: Dataset[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)] =
-            flags match {
-              case Left(flagBySrc) =>
-                val flagBc = spark.sparkContext.broadcast(flagBySrc)
-                metaDs.map { case (job, st, a, h, ns, n) =>
-                  val (c, u) = flagBc.value.getOrElse(job.urlKey, (0L, 0L))
-                  (job, st, a, h, ns, n, c, u)
-                }
-              case Right(flagDf) =>
-                metaDs.join(flagDf.withColumnRenamed("srcJob", "jk"),
-                    col("_1.urlKey") === col("jk"), "left")
-                  .select(col("_1"), col("_2"), col("_3"), col("_4"), col("_5"),
-                    col("_6"), coalesce(col("created"), lit(0L)).as("_7"),
-                    coalesce(col("updated"), lit(0L)).as("_8"))
-                  .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
-            }
-          val upd = metaFlagged.map {
-            case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
-              val tdel = routesLocal.value.get(job.routeId)
-                .map(_.transitionDelay).getOrElse(0)
-              CrawlEngine.advance(job, action, hasNextPage, newState,
-                nSpawned, created, updated, stepNow, tdel, backoffLocal)
-          }
-          val logDf = metaFlagged.map {
-            case (job, status, action, hasNext, _, nSpawned, created, updated) =>
-              CrawlEngine.logRow(stepNow, job, status, action, hasNext,
-                nSpawned, created, updated)
-          }.toDF()
-          (upd, logDf)
-      }
+    // logRow). Driver path: one driver loop over the flagged meta array →
+    // local relations, no re-scan of the landed table for the state
+    // rewrite, the fetch-log write OR the archive write. Distributed path:
+    // a byte-free Dataset projection with the flags left-joined.
+    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame) = flagged match {
+      case Left(rows) =>
+        val upd = rows.map { case (r, (c, u)) =>
+          val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
+          CrawlEngine.advance(r.job, r.action, r.hasNextPage, r.newState,
+            r.spawned.size, c, u, stepNow, tdel, backoffLocal)
+        }
+        val logs = rows.map { case (r, (c, u)) =>
+          CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
+            r.hasNextPage, r.spawned.size, c, u)
+        }
+        (spark.createDataset(upd.toSeq).coalesce(1),
+          spark.createDataset(logs.toSeq).coalesce(1).toDF())
+      case Right(flagDf) =>
+        val metaFlagged = outcomes
+          .join(flagDf, col("job.urlKey") === col("srcJob"), "left")
+          .select(col("job").as("_1"), col("status").as("_2"),
+            col("action").as("_3"), col("hasNextPage").as("_4"),
+            col("newState").as("_5"), size(col("spawned")).as("_6"),
+            coalesce(col("created"), lit(0L)).as("_7"),
+            coalesce(col("updated"), lit(0L)).as("_8"))
+          .as[(CrawlJob, Int, String, Boolean, Map[String, String], Int, Long, Long)]
+        val upd = metaFlagged.map {
+          case (job, _, action, hasNextPage, newState, nSpawned, created, updated) =>
+            val tdel = routesLocal.value.get(job.routeId)
+              .map(_.transitionDelay).getOrElse(0)
+            CrawlEngine.advance(job, action, hasNextPage, newState,
+              nSpawned, created, updated, stepNow, tdel, backoffLocal)
+        }
+        val logDf = metaFlagged.map {
+          case (job, status, action, hasNext, _, nSpawned, created, updated) =>
+            CrawlEngine.logRow(stepNow, job, status, action, hasNext,
+              nSpawned, created, updated)
+        }.toDF()
+        (upd, logDf)
+    }
 
     // -- frontier rewrite + per-host crawl-delay bump --------------------
-    // driver-sized waves: keys broadcast → the frontier is narrowly scanned
-    // and filtered, never shuffled or joined — the rewrite is one codegen'd
-    // pass. Larger waves: plain anti-join, strategy left to Catalyst/AQE.
-    val untouched = {
-      // the fetch stage maps wave rows 1:1 to outcomes, so the tiny path's
-      // meta array already holds every wave key — no collect job needed
-      val waveKeysLocal: Option[Array[Long]] =
-        metaLocal.map(_.map(_.job.urlKey).sorted)
-      if (waveOnDriver) {
-        val waveKeysBc = spark.sparkContext.broadcast(waveKeysLocal.getOrElse(
-          wave.select(col("urlKey")).as[Long].collect().sorted))
+    // Driver path: the meta array holds every wave key (the fetch stage
+    // maps wave rows 1:1 to outcomes), broadcast → the frontier is narrowly
+    // scanned and filtered, never shuffled or joined — the rewrite is one
+    // codegen'd pass. Distributed path: plain anti-join, strategy left to
+    // Catalyst/AQE.
+    val untouched = metaLocal match {
+      case Some(rows) =>
+        val waveKeysBc = spark.sparkContext.broadcast(rows.map(_.job.urlKey).sorted)
         val notInWave = udf((k: Long) =>
           java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
-        front.filter(notInWave(col("urlKey"))).as[CrawlJob]
-      } else
+        front.filter(notInWave(col("urlKey")))
+      case None =>
         front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
           .as[CrawlJob]
     }
@@ -1380,14 +1278,14 @@ final class CrawlEngine(
     }
 
     // -- bloom update -----------------------------------------------------
-    val bloom2 = (shardsLocal, freshKeysLocal) match {
-      case (Some(shards), Some(fk)) =>
+    val bloom2 = freshLocal match {
+      case Some((shards, fk)) =>
         val byPid = fk.groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
         val merged = shards.map(sh =>
           byPid.get(sh.pid).map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
         shardCache = Some((v + 1, merged))
         spark.createDataset(merged.toSeq)
-      case _ =>
+      case None =>
         shardCache = None
         BloomSeen.insert(readBloom(v), fresh.map(_.urlKey), cfg.bloomPartitions)
     }

@@ -139,32 +139,39 @@ class CrawlEngineSpec extends SparkSpec {
       .sameElements(b.deadLetters.collect().map(_.urlKey).sorted))
   }
 
-  test("middle driver path (probe + per-plan collects) == tiny single-collect path") {
-    // driverCollectMaxRows = 1024 keeps every wave driver-resident but puts
-    // the tiny-path threshold (maxRows/1024) at 1 row, so multi-row waves
-    // run the probe + per-plan-collect middle path; the default config runs
-    // the single-collect tiny path. Items, frontier AND the full fetch log
-    // must be identical.
-    val dirM = tmpDir("engine-middle")
+  test("supersteps that switch between the driver and distributed paths == an all-driver run") {
+    // driverCollectMaxRows = 3 × 1024 puts the driver-path bound
+    // (maxRows/1024) at 3 rows, between this crawl's smallest wave (2) and
+    // largest (4): its 2-row first and last steps run on the driver and the
+    // steps between distributed, so the item-meta mirror, bloom shard cache
+    // and run accounting cross both switches. The default config runs
+    // every step on the driver. Items, frontier, the full fetch log AND the
+    // run summary must be identical.
+    val cap = 3
+    val dirM = tmpDir("engine-mixed")
     val m = new CrawlEngine(spark, routes, fetcher, Nil,
       EngineConfig(statePath = dirM, hostBudget = 2,
         bloomPartitions = 4, bloomCapacityPerShard = 1 << 16,
-        driverCollectMaxRows = 1024L))
+        driverCollectMaxRows = cap * 1024L))
     m.seed(SyntheticCorpus.seeds(spec))
-    m.run()
-    val dirT = tmpDir("engine-tiny")
-    val t = newEngine(dirT)
-    t.seed(SyntheticCorpus.seeds(spec))
-    t.run()
-    val im = m.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
-    val it = t.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
-    assert(im.sameElements(it), "middle-path items differ from tiny path")
-    val fm = m.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
-    val ft = t.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
-    assert(fm.sameElements(ft), "middle-path frontier differs from tiny path")
+    val sm = m.run()
+    val dirD = tmpDir("engine-all-driver")
+    val d = newEngine(dirD)
+    d.seed(SyntheticCorpus.seeds(spec))
+    val sd = d.run()
     val lm = m.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
-    val lt = t.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
-    assert(lm.sameElements(lt), "middle-path fetch log differs from tiny path")
+    val waveSizes = lm.groupBy(_.step).values.map(_.length)
+    assert(waveSizes.exists(_ <= cap) && waveSizes.exists(_ > cap),
+      s"wave sizes $waveSizes do not straddle the driver-path bound $cap")
+    val im = m.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
+    val id = d.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
+    assert(im.sameElements(id), "mixed-path items differ from the all-driver run")
+    val fm = m.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
+    val fd = d.frontier.collect().map(j => (j.urlKey, j.stats, j.state)).sortBy(_._1)
+    assert(fm.sameElements(fd), "mixed-path frontier differs from the all-driver run")
+    val ld = d.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
+    assert(lm.sameElements(ld), "mixed-path fetch log differs from the all-driver run")
+    assert(sm == sd, "mixed-path run summary differs from the all-driver run")
   }
 
   test("hostMinDelayMs bounds the per-host fetch rate across split tasks") {

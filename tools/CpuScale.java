@@ -20,6 +20,10 @@ public class CpuScale {
     }
     for (Thread t : ts) t.join();
     double sec = (System.nanoTime() - t0) / 1e9;
+    // consume the results so the JIT cannot drop the FP loop as dead code
+    double sum = 0;
+    for (double x : sink) sum += x;
+    System.out.printf("sink=%.3e ", sum);
     return threads * iters / sec / 1e6;
   }
   public static void main(String[] a) throws Exception {
