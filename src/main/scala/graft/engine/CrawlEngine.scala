@@ -190,15 +190,20 @@ case class EngineConfig(
     /** Bound on the driver path of a superstep (see [[CrawlEngine.step]]).
       * A wave of at most `driverCollectMaxRows / 1024` rows (1,953 at the
       * default) runs on the driver: ONE collect of its byte-free outcome
-      * metadata feeds the item decisions, spawn dedup and state rewrite,
-      * ~5 Spark jobs per superstep. The /1024 is the per-page envelope: a
-      * page yields at most ~1,024 items + links, so the rows such a step
-      * holds on the driver (wave keys, item summaries, spawn candidates)
-      * stay under this bound. Larger waves run the distributed plans
-      * (anti-joins + banded suppression + flag joins) — same semantics, no
-      * driver state, so a 10^6-host frontier degrades to slower supersteps
-      * instead of a driver OOM. Also caps the driver-side item-meta mirror.
-      * Tests force 0 to pin driver/distributed parity.
+      * metadata feeds the item decisions, spawn dedup and state rewrite.
+      * The /1024 is the per-page envelope: a page yields at most ~1,024
+      * items + links, so the rows such a step holds on the driver (wave
+      * keys, item summaries, spawn candidates) stay under this bound. The
+      * same `/ 1024` bound caps the driver-side frontier mirror: while the
+      * pending frontier has at most that many rows, the driver holds it as
+      * an array and builds the wave, the empty-wave skip-ahead and the
+      * frontier rewrite with no Spark job. Larger waves run the distributed
+      * plans (anti-joins + banded suppression + flag joins) and larger
+      * frontiers the distributed wave — same semantics, no driver state, so
+      * a 10^6-host frontier degrades to slower supersteps instead of a
+      * driver OOM. Also caps the driver-side item-meta mirror. 0 forces
+      * every superstep (and every seed list but an empty one) distributed;
+      * tests use it to pin driver/distributed parity.
       */
     driverCollectMaxRows: Long = 2000000L)
 
@@ -210,7 +215,9 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *
   * Each superstep (one call to [[step]]):
   *
-  *  1. politeness-scheduled wave off the frontier (shuffle 1: by salted host)
+  *  1. politeness-scheduled wave off the frontier: a driver loop over the
+  *     frontier mirror while the pending frontier has at most
+  *     `driverCollectMaxRows / 1024` rows, else shuffle 1 (by salted host)
   *  2. `mapPartitions` fetch+extract, which WRITES its own outcomes (items
   *     + payload bytes) to the raw step table as it fetches — narrow,
   *     embarrassingly parallel, and the only pass that ever touches bytes
@@ -222,9 +229,9 @@ case class RunSummary(steps: Int, fetched: Long, items: Long, deadLettered: Long
   *  5. frontier/state/metrics rewrite + atomic snapshot commit (pipelined —
   *     overlaps the next superstep's wave + fetch)
   *
-  * Three shuffles per superstep, NONE carrying image bytes: payloads go
-  * scraper → parquet inside the fetch task and are only re-read by item
-  * consumers (merge-on-read). Every commit is a resume point: [[resume]]
+  * At most three shuffles per superstep, NONE carrying image bytes:
+  * payloads go scraper → parquet inside the fetch task and are only re-read
+  * by item consumers (merge-on-read). Every commit is a resume point: [[resume]]
   * continues from the latest snapshot with identical results (kill-safe via
   * the store's atomic rename).
   */
@@ -296,9 +303,18 @@ final class CrawlEngine(
   /** (version, step) of the latest ISSUED commit (possibly in flight) —
     * the in-memory twin of `store.latestVersion`/`stepOf`. */
   private var issuedState: Option[(Int, Int)] = None
-  /** version → eagerly-checkpointed frontier of that version: the next
-    * superstep's wave scans memory instead of re-reading the snapshot. */
+  /** version → in-memory frontier of that version (a local checkpoint, or a
+    * local relation over [[frontierLocal]]): the next superstep's wave
+    * scans memory instead of re-reading the snapshot. */
   private var frontierCache: Option[(Int, Dataset[CrawlJob])] = None
+  /** version → the rows of [[frontierCache]]'s Dataset, held on the driver
+    * while the pending frontier has at most [[tinyCap]] rows (the
+    * [[itemMetaLocal]] pattern): that superstep's wave, empty-wave
+    * skip-ahead, exact-seen active leg and frontier rewrite run as driver
+    * loops with zero Spark jobs, and the Dataset is a one-partition local
+    * relation over the same rows. None for any other version.
+    */
+  private var frontierLocal: Option[(Int, Array[CrawlJob])] = None
   /** step → checkpointed (key, phash) of every item delta row up to step —
     * feeds near-dup suppression + created/updated flags without re-scanning
     * the delta dirs each superstep. Invalidated by [[compactItems]] (which
@@ -318,10 +334,20 @@ final class CrawlEngine(
     * forces everything distributed. */
   private def tinyCap: Long = cfg.driverCollectMaxRows / 1024
 
-  /** The pending frontier is small enough that its wave is driver-sized by
-    * construction (see [[step]]). */
+  /** The pending frontier is small enough for the driver mirror, and its
+    * wave driver-sized by construction (see [[step]]). */
   private def tinyFrontier: Boolean =
-    pendingCount > 0 && pendingCount <= math.max(1L, tinyCap)
+    pendingCount > 0 && pendingCount <= tinyCap
+
+  /** Make `rows` the frontier of version `ver`: its driver mirror and the
+    * one-partition Dataset over it that the commit writes as one file. */
+  private def mirrorFrontier(ver: Int, rows: Array[CrawlJob]): Dataset[CrawlJob] = {
+    val ds = spark.createDataset(rows.toSeq).coalesce(1)
+    frontierLocal = Some((ver, rows))
+    frontierCache = Some((ver, ds))
+    pendingCount = rows.length
+    ds
+  }
 
   // ---- exact driver-side run accounting --------------------------------
   // Maintained while every superstep since seed() ran in THIS engine
@@ -501,11 +527,6 @@ final class CrawlEngine(
     if (steps.isEmpty) -1 else steps.max
   }
 
-  private def readStepPartitioned(base: String, upToStep: Int): Option[DataFrame] = {
-    if (graft.state.StateIO.listNames(base).isEmpty) None
-    else Some(spark.read.parquet(base).filter(col("step") <= upToStep))
-  }
-
   private def readStepPartitioned(base: String, upToStep: Int,
       dataSchema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
     if (graft.state.StateIO.listNames(base).isEmpty) None
@@ -660,8 +681,8 @@ final class CrawlEngine(
   private def seedResolved(seeds: Seq[(String, String, Map[String, String])]): Unit =
     withEngineConf {
     awaitCommit()
-    issuedState = None; frontierCache = None; itemMetaCache = None
-    shardCache = None; itemMetaLocal = None
+    issuedState = None; frontierCache = None; frontierLocal = None
+    itemMetaCache = None; shardCache = None; itemMetaLocal = None
     val seedJobs = seeds.toDF("routeId", "rawUrl", "query")
       .withColumn("url", graft.canon.CanonUdfs.canon_url(col("rawUrl")))
       .withColumn("host", graft.canon.CanonUdfs.url_host(col("url")))
@@ -683,20 +704,19 @@ final class CrawlEngine(
 
     acctValid = true
     fetchedAcc = 0L; itemsAcc = 0L; dlAcc = 0L
-    if (seeds.size <= math.max(1L, tinyCap)) {
+    if (seeds.size <= tinyCap) {
       // small-seed fast path: ONE Spark job evaluates the (local-relation)
       // canon/dedup/robots plan; the bloom shards are built driver-side and
       // both state tables land coalesced. The seed ALSO primes the frontier
-      // and shard caches, so step 1 never re-reads the v0 snapshot.
+      // mirror and the shard cache, so step 1 never re-reads the v0 snapshot.
       val jobsArr = jobs.collect()
-      pendingCount = jobsArr.length
       val byPid = jobsArr.map(_.urlKey)
         .groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
       val shards = BloomSeen
         .emptyLocal(cfg.bloomPartitions, cfg.bloomCapacityPerShard, cfg.bloomFpp)
         .map(sh => byPid.get(sh.pid)
           .map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
-      val frontierDs = spark.createDataset(jobsArr.toSeq).coalesce(1)
+      val frontierDs = mirrorFrontier(0, jobsArr)
       store.commit(0, SnapshotStore.manifestJson(
         "version" -> 0, "step" -> -1, "frontier" -> jobsArr.length)) { dir =>
         inParallel(
@@ -705,7 +725,6 @@ final class CrawlEngine(
             .write.parquet(s"$dir/bloom"))
       }
       shardCache = Some((0, shards))
-      frontierCache = Some((0, frontierDs))
     } else {
       val jobsP = jobs.persist(StorageLevel.MEMORY_AND_DISK)
       val n = jobsP.count()
@@ -730,6 +749,15 @@ final class CrawlEngine(
   /** Execute the next superstep. Returns false (and commits nothing) when no
     * eligible work remains — the analogue of the worker's empty-poll exit
     * (reference: src/worker.js:108-110).
+    *
+    * The wave comes off the frontier mirror ([[frontierLocal]]) with no
+    * Spark job while the pending frontier has at most [[tinyCap]] rows; the
+    * empty-wave skip-ahead, the exact-seen probe's active leg and the
+    * frontier rewrite then run on the driver too, and a rewritten frontier
+    * within the bound stays mirrored. A larger frontier takes the salted
+    * [[Politeness.wave]] and a local checkpoint; it re-enters the mirror
+    * (one collect) at the first rewrite that brings it within the bound,
+    * and a resumed engine adopts a snapshot within it (one bounded collect).
     *
     * Once the wave is built, the superstep takes one of two paths:
     *  - driver path: the wave has at most [[tinyCap]] =
@@ -776,26 +804,38 @@ final class CrawlEngine(
     Seq(rawDir, suppressedDir, archiveDir, logDir("fetchlog"))
       .foreach(cleanStale(_, committed))
 
-    val front = frontierCache match {
-      case Some((`v`, f)) => f
-      case _ => readFrontier(v)
-    }
-    // A tiny pending frontier ⇒ the wave is driver-sized by construction:
-    // ONE collect job builds it, and the fetch stage repartitions a local
-    // relation. Unknown/large frontiers take an eager localCheckpoint
-    // (truncates lineage so every downstream action analyzes a shallow
-    // scan — catalyst planning was ~half of superstep wall clock before
-    // it) + a cheap count.
-    def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = {
-      val plan = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
-        cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter)
-      if (tinyFrontier) {
-        val arr = plan.collect()
-        (spark.createDataset(arr.toSeq), arr.length.toLong)
-      } else {
-        val w = plan.localCheckpoint(true)
+    // The frontier of version v, and its driver mirror when it has one. A
+    // cache miss (the first step after resume()) reads the snapshot and, when
+    // the pending count is unknown or within the bound, adopts it as the
+    // mirror with one bounded collect.
+    val (front, frontLocal) = timed("wave")(frontierCache match {
+      case Some((`v`, f)) => (f, frontierLocal.collect { case (`v`, rows) => rows })
+      case _ =>
+        val disk = readFrontier(v)
+        val adopted =
+          if (tinyCap > 0 && pendingCount <= tinyCap)
+            Some(disk.limit(math.min(tinyCap + 1, Int.MaxValue).toInt).collect())
+              .filter(_.length <= tinyCap)
+          else None
+        adopted match {
+          case Some(rows) => (mirrorFrontier(v, rows), adopted)
+          case None => (disk, None)
+        }
+    })
+    // A mirrored frontier ⇒ the wave is a driver loop (no Spark job) and the
+    // fetch stage repartitions a local relation. Other frontiers take an
+    // eager localCheckpoint (truncates lineage so every downstream action
+    // analyzes a shallow scan — catalyst planning was ~half of superstep
+    // wall clock before it) + a cheap count.
+    def buildWave(atStep: Int): (Dataset[CrawlJob], Long) = frontLocal match {
+      case Some(rows) =>
+        val w = Politeness.waveLocal(rows, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, hooks.jobFilter)
+        (spark.createDataset(w.toSeq), w.length.toLong)
+      case None =>
+        val w = Politeness.wave(front, atStep, cfg.hostBudget, routeCaps,
+          cfg.disabledRoutes, cfg.saltBuckets, hooks.jobFilter).localCheckpoint(true)
         (w, w.count())
-      }
     }
     var (wave, waveN) = timed("wave")(buildWave(s))
     if (waveN == 0) {
@@ -803,13 +843,20 @@ final class CrawlEngine(
       // waiting on a future step — jump the clock to the earliest one (the
       // analogue of the reference worker's idle poll-sleep, worker.js:108-110).
       wave.unpersist()
-      val pending = front
-        .filter(!col("state.finished"))
-        .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
-                else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
-        .agg(min(col("notBeforeStep"))).head()
-      if (pending.isNullAt(0)) return false
-      val nxt = pending.getInt(0)
+      val pending: Option[Int] = frontLocal match {
+        case Some(rows) => rows.iterator
+          .filter(j => !j.state.finished && !cfg.disabledRoutes(j.routeId))
+          .map(_.notBeforeStep).minOption
+        case None =>
+          val row = front
+            .filter(!col("state.finished"))
+            .filter(if (cfg.disabledRoutes.isEmpty) lit(true)
+                    else !col("routeId").isin(cfg.disabledRoutes.toSeq: _*))
+            .agg(min(col("notBeforeStep"))).head()
+          if (row.isNullAt(0)) None else Some(row.getInt(0))
+      }
+      if (pending.isEmpty) return false
+      val nxt = pending.get
       if (nxt <= s) return false // safety: no forward progress possible
       s = nxt
       val (w2, n2) = buildWave(s)
@@ -1020,8 +1067,8 @@ final class CrawlEngine(
     // cogroup. UrlCanon/urlKeyScala/allowedLocal are the exact functions the
     // plan's expressions evaluate — pinned by the path-switching parity test.
     var allowedJobsCkpt: Option[DataFrame] = None
-    // (fresh rows; on the driver path also the probed shards + fresh keys)
-    val (fresh: Dataset[CrawlJob], freshLocal: Option[(Array[BloomShard], Array[Long])]) =
+    // (fresh rows; on the driver path also the probed shards + fresh jobs)
+    val (fresh: Dataset[CrawlJob], freshLocal: Option[(Array[BloomShard], Array[CrawlJob])]) =
       timed("spawn")(metaLocal match {
         case Some(rows) =>
           val shards = shardCache.collect { case (`v`, sh) => sh }
@@ -1054,9 +1101,10 @@ final class CrawlEngine(
           val posSet = candKeys.iterator.zip(might.iterator)
             .collect { case (k, true) => k }.toSet
           // Exact check only on the bloom-positive sliver (true hits +
-          // fpp·new): the active frontier is column-scanned on urlKey,
-          // never shuffled; the archive leg prunes to the positive keys'
-          // bucket partitions (archiveProbePlan — PlanSpec-asserted), so
+          // fpp·new): the active frontier is the mirror when there is one,
+          // else column-scanned on urlKey, never shuffled; the archive leg
+          // prunes to the positive keys' bucket partitions
+          // (archiveProbePlan — PlanSpec-asserted), so
           // a probe of k keys touches ≤ min(k, archiveBuckets) buckets of
           // the all-jobs-ever table, not every archived key. Reading the
           // archive awaits any in-flight commit (it appends a step dir) —
@@ -1066,12 +1114,16 @@ final class CrawlEngine(
             if (posSet.isEmpty) Set.empty
             else {
               val posSorted = posSet.toArray.sorted
-              val posBc = spark.sparkContext.broadcast(posSorted)
-              val inPos = udf((k: Long) =>
-                java.util.Arrays.binarySearch(posBc.value, k) >= 0)
-              val activeSeen = front.select(col("urlKey"))
-                .filter(inPos(col("urlKey")))
-                .as[Long].collect().toSet
+              val activeSeen = frontLocal match {
+                case Some(rows) => rows.iterator.map(_.urlKey).filter(posSet).toSet
+                case None =>
+                  val posBc = spark.sparkContext.broadcast(posSorted)
+                  val inPos = udf((k: Long) =>
+                    java.util.Arrays.binarySearch(posBc.value, k) >= 0)
+                  front.select(col("urlKey"))
+                    .filter(inPos(col("urlKey")))
+                    .as[Long].collect().toSet
+              }
               awaitCommit()
               val archSeen = archiveProbePlan(posSorted, committed)
                 .map(_.as[Long].collect().toSet)
@@ -1085,8 +1137,8 @@ final class CrawlEngine(
               CrawlJob(k, u, h, r,
                 priority = routes.get(r).map(_.priority).getOrElse(50),
                 query = q, createdStep = stepNow + 1, notBeforeStep = stepNow + 1)
-            }.toSeq
-          (spark.createDataset(freshJobs), Some((shards, freshKeySet.toArray)))
+            }.toArray
+          (spark.createDataset(freshJobs.toSeq), Some((shards, freshJobs)))
         case None =>
           val spawnedPart = outcomes
             .select(explode(col("spawned")).as("sj"))
@@ -1190,7 +1242,8 @@ final class CrawlEngine(
     // local relations, no re-scan of the landed table for the state
     // rewrite, the fetch-log write OR the archive write. Distributed path:
     // a byte-free Dataset projection with the flags left-joined.
-    val (updatedWave: Dataset[CrawlJob], stepFetchLog: DataFrame) = flagged match {
+    val (updatedWave: Dataset[CrawlJob], updLocal: Option[Array[CrawlJob]],
+         stepFetchLog: DataFrame) = flagged match {
       case Left(rows) =>
         val upd = rows.map { case (r, (c, u)) =>
           val tdel = routes.get(r.job.routeId).map(_.transitionDelay).getOrElse(0)
@@ -1201,7 +1254,7 @@ final class CrawlEngine(
           CrawlEngine.logRow(stepNow, r.job, r.status, r.action,
             r.hasNextPage, r.spawned.size, c, u)
         }
-        (spark.createDataset(upd.toSeq).coalesce(1),
+        (spark.createDataset(upd.toSeq).coalesce(1), Some(upd),
           spark.createDataset(logs.toSeq).coalesce(1).toDF())
       case Right(flagDf) =>
         val metaFlagged = outcomes
@@ -1224,63 +1277,75 @@ final class CrawlEngine(
             CrawlEngine.logRow(stepNow, job, status, action, hasNext,
               nSpawned, created, updated)
         }.toDF()
-        (upd, logDf)
+        (upd, None, logDf)
     }
 
     // -- frontier rewrite + per-host crawl-delay bump --------------------
-    // Driver path: the meta array holds every wave key (the fetch stage
-    // maps wave rows 1:1 to outcomes), broadcast → the frontier is narrowly
-    // scanned and filtered, never shuffled or joined — the rewrite is one
-    // codegen'd pass. Distributed path: plain anti-join, strategy left to
-    // Catalyst/AQE.
-    val untouched = metaLocal match {
-      case Some(rows) =>
-        val waveKeysBc = spark.sparkContext.broadcast(rows.map(_.job.urlKey).sorted)
-        val notInWave = udf((k: Long) =>
-          java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
-        front.filter(notInWave(col("urlKey")))
-      case None =>
-        front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
-          .as[CrawlJob]
-    }
+    // robots crawl-delay: bump hosts fetched this wave. The delayed-host
+    // universe is the robots rules table (tiny by design), so the touched∩
+    // delayed set collects driver-side at ANY wave size.
+    val hostNext: Map[String, Int] =
+      if (hostDelay.isEmpty) Map.empty
+      else metaLocal match {
+        case Some(rows) => rows.iterator.map(_.job.host)
+          .filter(hostDelay.contains).distinct
+          .map(h => h -> (stepNow + hostDelay(h))).toMap
+        case None => wave.select(col("host")).distinct()
+          .filter(col("host").isin(hostDelay.keys.toSeq: _*))
+          .as[String].collect()
+          .map(h => h -> (stepNow + hostDelay(h))).toMap
+      }
     // Jobs that finished THIS step leave the hot frontier for the append-
     // only archive (written in the commit below); the versioned frontier —
     // scanned, rewritten and snapshotted every superstep — stays O(pending).
     val archivedWave = updatedWave.filter(col("state.finished"))
-    val frontier2 = untouched
-      .unionByName(updatedWave.filter(!col("state.finished")))
-      .unionByName(fresh)
-    val frontier3 = {
-      // robots crawl-delay: bump hosts fetched this wave. The delayed-host
-      // universe is the robots rules table (tiny by design), so the touched∩
-      // delayed set collects driver-side at ANY wave size.
-      val hostNext: Map[String, Int] =
-        if (hostDelay.isEmpty) Map.empty
-        else metaLocal match {
-          case Some(rows) => rows.iterator.map(_.job.host)
-            .filter(hostDelay.contains).distinct
-            .map(h => h -> (stepNow + hostDelay(h))).toMap
-          case None => wave.select(col("host")).distinct()
-            .filter(col("host").isin(hostDelay.keys.toSeq: _*))
-            .as[String].collect()
-            .map(h => h -> (stepNow + hostDelay(h))).toMap
-        }
-      if (hostNext.isEmpty) frontier2
-      else {
-        val nextLit = typedLit(hostNext)
-        frontier2.toDF()
-          .withColumn("notBeforeStep",
-            when(element_at(nextLit, col("host")).isNotNull && !col("state.finished"),
-              greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
-            .otherwise(col("notBeforeStep")))
-          .as[CrawlJob]
+    // untouched + unfinished updated + fresh, then the crawl-delay bump.
+    // Mirror + driver path: a driver loop (Left). Otherwise a plan (Right):
+    // on the driver path the meta array holds every wave key (the fetch
+    // stage maps wave rows 1:1 to outcomes), broadcast → the frontier is
+    // narrowly scanned and filtered, never shuffled or joined; on the
+    // distributed path a plain anti-join, strategy left to Catalyst/AQE.
+    val frontier3: Either[Array[CrawlJob], Dataset[CrawlJob]] =
+      (frontLocal, updLocal, freshLocal) match {
+        case (Some(rows), Some(upd), Some((_, freshJobs))) =>
+          val waveKeys = upd.iterator.map(_.urlKey).toSet
+          Left((rows.iterator.filterNot(j => waveKeys(j.urlKey)) ++
+              upd.iterator.filterNot(_.state.finished) ++ freshJobs.iterator)
+            .map(j => hostNext.get(j.host) match {
+              case Some(n) if !j.state.finished =>
+                j.copy(notBeforeStep = math.max(j.notBeforeStep, n))
+              case _ => j
+            }).toArray)
+        case _ =>
+          val untouched = metaLocal match {
+            case Some(rows) =>
+              val waveKeysBc = spark.sparkContext.broadcast(rows.map(_.job.urlKey).sorted)
+              val notInWave = udf((k: Long) =>
+                java.util.Arrays.binarySearch(waveKeysBc.value, k) < 0)
+              front.filter(notInWave(col("urlKey")))
+            case None =>
+              front.join(wave.select(col("urlKey")), Seq("urlKey"), "left_anti")
+                .as[CrawlJob]
+          }
+          val frontier2 = untouched
+            .unionByName(updatedWave.filter(!col("state.finished")))
+            .unionByName(fresh)
+          if (hostNext.isEmpty) Right(frontier2)
+          else {
+            val nextLit = typedLit(hostNext)
+            Right(frontier2.toDF()
+              .withColumn("notBeforeStep",
+                when(element_at(nextLit, col("host")).isNotNull && !col("state.finished"),
+                  greatest(col("notBeforeStep"), element_at(nextLit, col("host"))))
+                .otherwise(col("notBeforeStep")))
+              .as[CrawlJob])
+          }
       }
-    }
 
     // -- bloom update -----------------------------------------------------
     val bloom2 = freshLocal match {
       case Some((shards, fk)) =>
-        val byPid = fk.groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
+        val byPid = fk.map(_.urlKey).groupBy(k => BloomSeen.pidOf(k, cfg.bloomPartitions))
         val merged = shards.map(sh =>
           byPid.get(sh.pid).map(ks => BloomSeen.insertLocal(sh, ks)).getOrElse(sh))
         shardCache = Some((v + 1, merged))
@@ -1298,12 +1363,25 @@ final class CrawlEngine(
     // uncompressed: the payload column is already PNG/JPEG-compressed, so
     // parquet snappy only burns CPU on bytes it cannot shrink (the small
     // metadata columns still dictionary/RLE-encode regardless)
-    // The next superstep's wave scans this checkpoint from memory; the
+    // The next superstep's wave reads the new frontier from memory; the
     // background frontier write below reuses it (no recompute, no re-read
-    // of the snapshot). Byte-free rows — cheap to materialize.
+    // of the snapshot). Within the bound it is (re-)mirrored — no job for a
+    // driver-loop rewrite, one collect for a plan; above it, byte-free rows
+    // checkpointed once, the checkpoint's materializing count making the
+    // pending count exact so a shrinking frontier re-enters the mirror.
     val prevFrontCkpt: Option[Dataset[CrawlJob]] =
       frontierCache.collect { case (`v`, f) => f }
-    val frontier3Ckpt = timed("front.ckpt")(frontier3.localCheckpoint(true))
+    val frontier3Ckpt = timed("front.ckpt")(frontier3 match {
+      case Left(rows) if rows.length <= tinyCap => mirrorFrontier(v + 1, rows)
+      case Left(rows) =>
+        pendingCount = rows.length
+        spark.createDataset(rows.toSeq).localCheckpoint(true)
+      case Right(plan) if tinyFrontier => mirrorFrontier(v + 1, plan.collect())
+      case Right(plan) =>
+        val ckpt = plan.localCheckpoint(false)
+        pendingCount = ckpt.count()
+        if (tinyFrontier) mirrorFrontier(v + 1, ckpt.collect()) else ckpt
+    })
     frontierCache = Some((v + 1, frontier3Ckpt))
 
     // All four superstep writes (delta, fetch log, frontier, bloom) are

@@ -27,12 +27,48 @@ import graft.model.CrawlJob
   *     so no route's candidates may crowd out another's during truncation.
   *  2. *Exact sequential take*: repartition by host, sort within partitions
   *     by (host, priority desc, createdStep, urlKey), and walk each host's
-  *     bounded candidate list once, applying route caps + host budget —
-  *     a single narrow pass (mapPartitions), no further ranking windows.
+  *     bounded candidate list once ([[takeSorted]]), applying route caps +
+  *     host budget — a single narrow pass (mapPartitions), no further
+  *     ranking windows.
+  *
+  * [[waveLocal]] is the driver-side twin for a frontier held as an array:
+  * the same eligibility filter and the same [[takeSorted]] over one sort,
+  * no salting — phase 1 only truncates, and the take never accepts a job
+  * outside its (host, route) top-hostBudget, so truncation cannot change
+  * the result.
   */
 object Politeness {
 
   val orderCols = Seq(col("priority").desc, col("createdStep").asc, col("urlKey").asc)
+
+  /** (host, priority desc, createdStep, urlKey) — the order [[takeSorted]]
+    * expects; hosts need only be contiguous. */
+  private val takeOrder: Ordering[CrawlJob] =
+    Ordering.by[CrawlJob, (String, Int, Int, Long)](j =>
+      (j.host, j.priority, j.createdStep, j.urlKey))(
+      Ordering.Tuple4(Ordering.String, Ordering.Int.reverse, Ordering.Int, Ordering.Long))
+
+  /** The exact sequential take: walk jobs sorted by [[takeOrder]] and keep,
+    * per host, the first `hostBudget` whose route is still under its cap
+    * (cap < 0 = uncapped) — the reference's "dequeue highest-priority, skip
+    * capped routes, backfill from the rest".
+    */
+  def takeSorted(sorted: Iterator[CrawlJob], hostBudget: Int,
+      routeCaps: Map[String, Int]): Iterator[CrawlJob] = {
+    var curHost: String = null
+    var taken = 0
+    val routeCount = scala.collection.mutable.Map.empty[String, Int]
+    sorted.filter { j =>
+      if (j.host != curHost) {
+        curHost = j.host; taken = 0; routeCount.clear()
+      }
+      val cap = routeCaps.getOrElse(j.routeId, -1)
+      val rc = routeCount.getOrElse(j.routeId, 0)
+      if (taken < hostBudget && (cap < 0 || rc < cap)) {
+        taken += 1; routeCount(j.routeId) = rc + 1; true
+      } else false
+    }
+  }
 
   def wave(
       frontier: Dataset[CrawlJob],
@@ -72,20 +108,20 @@ object Politeness {
       // size-based coalescing is active for the engine's small state ops.
       .repartition(spark.sessionState.conf.numShufflePartitions, col("host"))
       .sortWithinPartitions(Seq(col("host")) ++ orderCols: _*)
-      .mapPartitions { it =>
-        var curHost: String = null
-        var taken = 0
-        val routeCount = scala.collection.mutable.Map.empty[String, Int]
-        it.filter { j =>
-          if (j.host != curHost) {
-            curHost = j.host; taken = 0; routeCount.clear()
-          }
-          val cap = caps.getOrElse(j.routeId, -1)
-          val rc = routeCount.getOrElse(j.routeId, 0)
-          if (taken < budget && (cap < 0 || rc < cap)) {
-            taken += 1; routeCount(j.routeId) = rc + 1; true
-          } else false
-        }
-      }
+      .mapPartitions(it => takeSorted(it, budget, caps))
+  }
+
+  /** [[wave]] over a driver-held frontier, with no Spark job: same rows. */
+  def waveLocal(
+      frontier: Array[CrawlJob],
+      step: Int,
+      hostBudget: Int,
+      routeCaps: Map[String, Int],
+      disabled: Set[String] = Set.empty,
+      jobFilter: Option[CrawlJob => Boolean] = None): Array[CrawlJob] = {
+    val eligible = frontier.filter(j =>
+      !j.state.finished && j.notBeforeStep <= step && !disabled(j.routeId) &&
+        jobFilter.forall(_(j)))
+    takeSorted(eligible.sorted(takeOrder).iterator, hostBudget, routeCaps).toArray
   }
 }

@@ -144,7 +144,9 @@ class CrawlEngineSpec extends SparkSpec {
     // (maxRows/1024) at 3 rows, between this crawl's smallest wave (2) and
     // largest (4): its 2-row first and last steps run on the driver and the
     // steps between distributed, so the item-meta mirror, bloom shard cache
-    // and run accounting cross both switches. The default config runs
+    // and run accounting cross both switches. The same bound caps the
+    // frontier mirror: the pending frontier grows past 3 rows and shrinks
+    // back, so the mirror is left and re-entered. The default config runs
     // every step on the driver. Items, frontier, the full fetch log AND the
     // run summary must be identical.
     val cap = 3
@@ -163,6 +165,14 @@ class CrawlEngineSpec extends SparkSpec {
     val waveSizes = lm.groupBy(_.step).values.map(_.length)
     assert(waveSizes.exists(_ <= cap) && waveSizes.exists(_ > cap),
       s"wave sizes $waveSizes do not straddle the driver-path bound $cap")
+    // the pending frontier entering step s: jobs created by then (a job
+    // spawned at step s - 1 has createdStep s) and not finished before it
+    val allJobs = m.frontier.collect()
+    val pending = lm.map(_.step).distinct.sorted.map(s => s -> allJobs.count(j =>
+      j.createdStep <= s && (!j.state.finished || j.state.finishedStep >= s)))
+    val firstAbove = pending.indexWhere(_._2 > cap)
+    assert(firstAbove > 0 && pending.drop(firstAbove).exists(_._2 <= cap),
+      s"pending frontier per step $pending does not leave and re-enter the bound $cap")
     val im = m.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
     val id = d.items.collect().map(i => (i.key, i.image_id, i.phash, i.caption)).sortBy(_._1)
     assert(im.sameElements(id), "mixed-path items differ from the all-driver run")
@@ -218,12 +228,12 @@ class CrawlEngineSpec extends SparkSpec {
     val resumed = new CrawlEngine(spark, routes, fetcher, Nil,
       EngineConfig(statePath = dirA, hostBudget = 2,
         bloomPartitions = 4, bloomCapacityPerShard = 1 << 16))
-    resumed.resume()
+    val sumA = resumed.resume()
 
     val dirB = tmpDir("engine-straight")
     val b = newEngine(dirB)
     b.seed(SyntheticCorpus.seeds(specSmall))
-    b.run()
+    val sumB = b.run()
 
     val keysA = resumed.items.collect().map(_.key).sorted
     val keysB = b.items.collect().map(_.key).sorted
@@ -233,6 +243,12 @@ class CrawlEngineSpec extends SparkSpec {
     val fB = b.frontier.collect().map(j => (j.urlKey, j.state.finished,
       j.stats.pages, j.state.currentPage)).sortBy(_._1)
     assert(fA.sameElements(fB), "resumed frontier differs from straight run")
+    // the resumed engine adopts the snapshot frontier as its driver mirror;
+    // every later wave (order included) must match the straight run
+    val lA = resumed.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
+    val lB = b.fetchLog.collect().sortBy(l => (l.step, l.urlKey))
+    assert(lA.sameElements(lB), "resumed fetch log differs from straight run")
+    assert(sumA.fetched == sumB.fetched, s"fetched ${sumA.fetched} != ${sumB.fetched}")
   }
 
   test("compaction mid-crawl: identical final state, absorbed deltas dropped") {
